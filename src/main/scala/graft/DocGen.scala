@@ -70,13 +70,17 @@ object DocGen {
     sb.toString
   }
 
+  /** `readme` with the text between the markers replaced by [[render]]. */
+  def regenerate(readme: String): String = {
+    val (b, e) = (readme.indexOf(Begin), readme.indexOf(End))
+    require(b >= 0 && e > b, "README.md is missing the generated-inventory markers")
+    readme.take(b + Begin.length) + "\n" + render() + readme.drop(e)
+  }
+
   def main(args: Array[String]): Unit = {
     val readme = java.nio.file.Paths.get("README.md")
     val text = new String(java.nio.file.Files.readAllBytes(readme), "UTF-8")
-    val (b, e) = (text.indexOf(Begin), text.indexOf(End))
-    require(b >= 0 && e > b, "README.md is missing the generated-inventory markers")
-    val updated = text.take(b + Begin.length) + "\n" + render() + text.drop(e)
-    java.nio.file.Files.write(readme, updated.getBytes("UTF-8"))
+    java.nio.file.Files.write(readme, regenerate(text).getBytes("UTF-8"))
     println(s"[docgen] README.md inventory regenerated: ${SparkEntry.queries.size} queries")
   }
 }

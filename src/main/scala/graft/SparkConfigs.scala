@@ -47,7 +47,7 @@ object SparkConfigs {
     "spark.shuffle.compress"                          -> "true",
     "spark.sql.parquet.filterPushdown"                -> "true",
     "spark.sql.parquet.aggregatePushdown"             -> "true",
-    // graft's native expressions SQL-visible cluster-wide:
-    "spark.sql.extensions"                            -> "graft.functions.GraftExtensions"
+    // graft's optimizer rule and SQL functions, cluster-wide:
+    "spark.sql.extensions"                            -> "graft.plans.GraftSparkExtensions"
   )
 }

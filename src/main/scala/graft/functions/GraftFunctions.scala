@@ -1,15 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Column-level entry points + registration for graft's native expressions.
   *
-  * Two registration paths:
-  *  - [[GraftExtensions]] for `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    (cluster-wide, SQL-visible at session build)
-  *  - [[GraftFunctions.register]] for an already-running session
+  * `graft_dot` is the SQL-visible one. It reaches SQL through
+  * [[graft.plans.GraftSparkExtensions]]
+  * (`spark.sql.extensions=graft.plans.GraftSparkExtensions`, at session
+  * build) or through [[GraftFunctions.register]] on a running session.
   */
 object GraftFunctions {
 
@@ -18,12 +18,6 @@ object GraftFunctions {
   /** Codegen'd dot product (see [[DotProduct]] for exact semantics). */
   def graft_dot(a: Column, b: Column): Column =
     GraftShim.column(DotProduct(GraftShim.expression(a), GraftShim.expression(b)))
-
-  def graft_norm(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(graft_dot(a, a))
-
-  def graft_cosine(a: Column, b: Column): Column =
-    graft_dot(a, b) / (graft_norm(a) * graft_norm(b))
 
   /** Codegen'd PQ encode→reconstruct (see [[PqEncode]] for exact
     * semantics). `book` is laid out `[subspace][code][dim]`, flattened.
@@ -40,22 +34,17 @@ object GraftFunctions {
       TopKByScore(GraftShim.expression(score), GraftShim.expression(id), k)
         .toAggregateExpression())
 
+  /** `graft_dot`'s SQL function description: name, info, builder. */
+  private[graft] val dotFunction
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    new FunctionIdentifier("graft_dot"),
+    new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
+    (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1)))
+
   /** Make the functions SQL-callable on a live session:
     * `SELECT graft_dot(e1, e2) FROM ...`.
     */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1)), "built-in")
-}
-
-/** SparkSessionExtensions hook — the full extension mechanism (builder
-  * prompt: custom Expression registered via SparkSessionExtensions).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-  }
+      "graft_dot", dotFunction._3, "built-in")
 }

@@ -4,10 +4,13 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 
 /** Bounded top-k buffer: keeps the k best (score desc, id asc) pairs.
+  * Scores compare under Spark's double ordering — NaN greatest, -0.0
+  * equal to 0.0 — so the kept set is the one a `(score DESC, id)` sort
+  * keeps, whatever the arrival order.
   *
   * Implemented as a primitive-array binary min-heap (root = worst kept
   * element) over two parallel arrays — no boxing, no tuple allocation per
@@ -20,8 +23,10 @@ final class TopKBuffer(val k: Int) {
   private[functions] val ids: Array[Long] = new Array[Long](k)
 
   // (sa, ia) is WORSE than (sb, ib): lower score, or equal score, larger id.
-  @inline private def worse(sa: Double, ia: Long, sb: Double, ib: Long): Boolean =
-    sa < sb || (sa == sb && ia > ib)
+  @inline private def worse(sa: Double, ia: Long, sb: Double, ib: Long): Boolean = {
+    val c = SQLOrderingUtil.compareDoubles(sa, sb)
+    c < 0 || (c == 0 && ia > ib)
+  }
 
   def add(score: Double, id: Long): Unit = {
     if (size < k) {
@@ -63,14 +68,16 @@ final class TopKBuffer(val k: Int) {
 
   /** Descending score, ascending id. */
   def sorted: Seq[(Double, Long)] =
-    (0 until size).map(i => (scores(i), ids(i))).sortBy { case (s, i) => (-s, i) }
+    (0 until size).map(i => (scores(i), ids(i)))
+      .sortWith { case ((sa, ia), (sb, ib)) => worse(sb, ib, sa, ia) }
 }
 
 /** Top-k-per-group as a [[TypedImperativeAggregate]] — the heap-based
   * alternative to `row_number().over(window) <= k`: no per-partition sort,
   * O(k) state per group, and partial buffers merge associatively so
   * map-side combine applies. Returns `array<struct<score,id>>` ordered by
-  * (score desc, id asc) — identical contents to the window formulation.
+  * (score desc, id asc) — the window formulation's rows (NaN first), minus
+  * rows whose score or id is null, which the aggregate skips.
   *
   * The 100 TB case for this operator: ranking N candidates per query via a
   * window requires shuffling and SORTING every partition's candidates;

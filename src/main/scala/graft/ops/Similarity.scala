@@ -53,7 +53,7 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  def cosine(a: Column, b: Column): Column = CosineScore.raw(a, b)
 
   /** Score-function family shared BY CONSTRUCTION across the IVF
     * surface — build-time list assignment ([[buildIvfIndex]]), probe
@@ -151,13 +151,45 @@ object Similarity {
     }
   }
 
-  /** One side's (id, vec, norm) projection, honoring a prepared norm. */
-  private def side(df: DataFrame, idCol: String, vecCol: String,
-                   id: String, v: String, n: String): DataFrame =
-    if (df.columns.contains(NormCol))
-      df.select(col(idCol).as(id), col(vecCol).as(v), col(NormCol).as(n))
-    else
-      df.select(col(idCol).as(id), col(vecCol).as(v), norm(col(vecCol)).as(n))
+  /** The column names of one side of a pair: (id, vector, norm). Top-k
+    * methods pair queries [[Q]] with candidates [[C]]; the near-dup pair
+    * finders pair [[Pair1]] with [[Pair2]].
+    */
+  private final case class Role(id: String, v: String, n: String)
+  private val Q = Role("query_id", "qv", "qn")
+  private val C = Role("neighbor_id", "cv", "cn")
+  private val Pair1 = Role("id1", "v1", "n1")
+  private val Pair2 = Role("id2", "v2", "n2")
+
+  /** One side's float projection (id, vec, norm), honoring a prepared
+    * [[NormCol]]. `extra` columns are evaluated in the same select, so a
+    * prepared [[SigCol]] is still resolvable for [[sigOf]].
+    */
+  private def side(df: DataFrame, idCol: String, vecCol: String, r: Role,
+                   extra: Column*): DataFrame = {
+    val n = if (df.columns.contains(NormCol)) col(NormCol) else norm(col(vecCol))
+    df.select(Seq(col(idCol).as(r.id), col(vecCol).as(r.v), n.as(r.n)) ++ extra: _*)
+  }
+
+  /** One side's int8 projection: the [[quantizeInt8]] vector and its
+    * integer norm. A prepared [[NormCol]] is the float norm, the wrong
+    * denominator here, so it is not used.
+    */
+  private def int8Side(df: DataFrame, idCol: String, vecCol: String, r: Role,
+                       extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as(r.id), col(vecCol).as("__v"),
+        vecMaxAbs(col(vecCol)).as("__mx")) ++ extra: _*)
+      .withColumn(r.v, quantizeInt8With(col("__v"), col("__mx")))
+      .drop("__v", "__mx")
+      .withColumn(r.n, sqrt(intDot(col(r.v), col(r.v)).cast("double")))
+
+  /** The candidate side as PQ reconstructions ([[pqReconFrame]]) and
+    * their norms.
+    */
+  private def pqSide(candidates: DataFrame, idCol: String, vecCol: String,
+                     m: Int, codebook: Seq[(Int, Int, Seq[Double])]): DataFrame =
+    pqReconFrame(candidates, idCol, vecCol, m, codebook)
+      .select(col(C.id), col("rv").as(C.v), norm(col("rv")).as(C.n))
 
   /** The `planes`-bit signature, honoring a prepared (wider-or-equal)
     * signature column via the prefix property documented at [[NormCol]].
@@ -189,22 +221,27 @@ object Similarity {
     } else lshBucket(col(vecCol), planes, dims)
   }
 
-  /** [[side]] plus the `planes`-bit bucket, projected in ONE select from
-    * the original frame so prepared norm/sig columns stay resolvable.
+  /** The `planes`-bit signature ([[sigOf]]) cut into `nBands` contiguous
+    * bands: one (id, band, bh) row per band. Two vectors are band
+    * candidates when they share any (band, bh).
     */
-  private def sideWithSig(df: DataFrame, idCol: String, vecCol: String,
-                          id: String, v: String, n: String,
-                          planes: Int, dims: Int): DataFrame = {
-    val nCol = if (df.columns.contains(NormCol)) col(NormCol) else norm(col(vecCol))
-    df.select(col(idCol).as(id), col(vecCol).as(v), nCol.as(n),
-      sigOf(df, vecCol, planes, dims).as("bucket"))
+  private def bandRows(df: DataFrame, idCol: String, vecCol: String, id: String,
+                       planes: Int, nBands: Int, dims: Int): DataFrame = {
+    require(planes % nBands == 0, "planes must divide into equal bands")
+    val w = planes / nBands
+    val bandCols = (0 until nBands).map { b =>
+      struct(lit(b).as("band"), substring(col("__sig"), b * w + 1, w).as("bh"))
+    }
+    df.select(col(idCol).as(id), sigOf(df, vecCol, planes, dims).as("__sig"))
+      .select(col(id), explode(array(bandCols: _*)).as("bb"))
+      .select(col(id), col("bb.band").as("band"), col("bb.bh").as("bh"))
   }
 
   /** Exact brute-force cosine top-k: for each query vector, the k nearest
     * candidates by cosine (desc), ties broken by candidate id. The
-    * candidate side is the big one — queries broadcast; the per-query
-    * window ranks locally after the broadcast join, so the only wide op is
-    * the final rank (partitioned by query id, never by corpus size).
+    * candidate side is the big one — queries broadcast, and the heap
+    * aggregate ([[topKPerQuery]]) cuts each partition to k rows per query
+    * before the only exchange.
     *
     * Norms are computed ONCE per side before the join (N+Q sqrt-dots
     * instead of 3·N·Q per-pair) — bit-identical to the per-pair formula
@@ -215,12 +252,8 @@ object Similarity {
                      maxRows: Long = DefaultQuadraticMaxRows): DataFrame = {
     requireSmall(candidates, maxRows, "bruteForceTopK",
       "ivfTopK/probeIvfIndexBatch (IVF) or lshTopK (hyperplane LSH)")
-    val q = side(queries, idCol, vecCol, "query_id", "qv", "qn")
-    val c = side(candidates, idCol, vecCol, "neighbor_id", "cv", "cn")
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    topKPerQuery(scored, "cos", "neighbor_id", k)
+    rankPairs(side(candidates, idCol, vecCol, C)
+      .crossJoin(broadcast(side(queries, idCol, vecCol, Q))), k)
   }
 
   /** Deterministic ±1 hyperplane weights: dimension i of plane p follows the
@@ -255,12 +288,9 @@ object Similarity {
     */
   def lshTopK(queries: DataFrame, candidates: DataFrame, idCol: String,
               vecCol: String, k: Int, planes: Int, dims: Int): DataFrame = {
-    val q = sideWithSig(queries, idCol, vecCol, "query_id", "qv", "qn", planes, dims)
-    val c = sideWithSig(candidates, idCol, vecCol, "neighbor_id", "cv", "cn", planes, dims)
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    topKPerQuery(scored, "cos", "neighbor_id", k)
+    def bucketed(df: DataFrame, r: Role) =
+      side(df, idCol, vecCol, r, sigOf(df, vecCol, planes, dims).as("bucket"))
+    rankPairs(bucketed(candidates, C).join(broadcast(bucketed(queries, Q)), Seq("bucket")), k)
   }
 
   /** MULTI-PROBE LSH top-k (Lv et al., VLDB'07's idea at hamming radius
@@ -281,17 +311,13 @@ object Similarity {
       substring(b, 1, i - 1),
       when(substring(b, i, 1) === "1", lit("0")).otherwise(lit("1")),
       substring(b, i + 1, planes - i))
-    val q0 = sideWithSig(queries, idCol, vecCol, "query_id", "qv", "qn",
-      planes, dims).withColumnRenamed("bucket", "__b")
-    val probes = q0.select(col("query_id"), col("qv"), col("qn"),
-      explode(array(col("__b") +:
+    val probes = side(queries, idCol, vecCol, Q,
+        sigOf(queries, vecCol, planes, dims).as("__b"))
+      .select(col(Q.id), col(Q.v), col(Q.n), explode(array(col("__b") +:
         (1 to planes).map(i => flipAt(col("__b"), i)): _*)).as("bucket"))
-    val c = sideWithSig(candidates, idCol, vecCol, "neighbor_id", "cv", "cn",
-      planes, dims)
-    val scored = c.join(broadcast(probes), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    topKPerQuery(scored, "cos", "neighbor_id", k)
+    val c = side(candidates, idCol, vecCol, C,
+      sigOf(candidates, vecCol, planes, dims).as("bucket"))
+    rankPairs(c.join(broadcast(probes), Seq("bucket")), k)
   }
 
   /** BANDED (OR-amplified) hyperplane-LSH top-k — the production recall
@@ -322,48 +348,27 @@ object Similarity {
   def lshTopKBanded(queries: DataFrame, candidates: DataFrame,
                     idCol: String, vecCol: String, k: Int,
                     planes: Int, nBands: Int, dims: Int): DataFrame = {
-    require(planes % nBands == 0, "planes must divide into equal bands")
-    val w = planes / nBands
-    val bandCols = (0 until nBands).map { b =>
-      struct(lit(b).as("band"), substring(col("__sig"), b * w + 1, w).as("bh"))
-    }
-    def bandRows(df: DataFrame, id: String) =
-      df.select(col(idCol).as(id), sigOf(df, vecCol, planes, dims).as("__sig"))
-        .select(col(id), explode(array(bandCols: _*)).as("bb"))
-        .select(col(id), col("bb.band").as("band"), col("bb.bh").as("bh"))
-    val cands = bandRows(candidates, "neighbor_id")
-      .join(broadcast(bandRows(queries, "query_id")), Seq("band", "bh"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "neighbor_id").distinct()
-    val c = side(candidates, idCol, vecCol, "neighbor_id", "cv", "cn")
-    val q = side(queries, idCol, vecCol, "query_id", "qv", "qn")
-    val scored = cands.join(c, Seq("neighbor_id")).join(broadcast(q), Seq("query_id"))
-      .withColumn("cos", round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    topKPerQuery(scored, "cos", "neighbor_id", k)
+    def bands(df: DataFrame, r: Role) =
+      bandRows(df, idCol, vecCol, r.id, planes, nBands, dims)
+    val cands = bands(candidates, C).join(broadcast(bands(queries, Q)), Seq("band", "bh"))
+      .select(Q.id, C.id).distinct()
+    rankPairs(cands.join(side(candidates, idCol, vecCol, C), Seq(C.id))
+      .join(broadcast(side(queries, idCol, vecCol, Q)), Seq(Q.id)), k)
   }
 
-  /** [[bruteForceTopK]] with the heap aggregate
-    * ([[graft.functions.TopKByScore]]) instead of a rank window: map-side
-    * partial top-k buffers collapse each partition to k rows per query
-    * BEFORE the shuffle, and no partition ever sorts. Identical output.
+  /** The one ranking step every top-k method ends in. `pairs` carries
+    * both sides' columns ([[Q]] and [[C]], built by [[side]],
+    * [[int8Side]] or [[pqSide]]); self-pairs are dropped, each pair is
+    * scored by `scorer` from the two vectors and the two side norms, and
+    * the k best per query are kept. Output: (query_id, neighbor_id,
+    * rank, `scoreCol`), scoreCol defaulting to the scorer's own name.
     */
-  def bruteForceTopKAgg(queries: DataFrame, candidates: DataFrame,
-                        idCol: String, vecCol: String, k: Int): DataFrame = {
-    import graft.functions.GraftFunctions.graft_topk
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      norm(col(vecCol)).as("qn"))
-    val c = candidates.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      norm(col(vecCol)).as("cn"))
-    c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-      .groupBy("query_id")
-      .agg(graft_topk(col("cos"), col("neighbor_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.id").as("neighbor_id"),
-        (col("pos") + 1).cast("int").as("rank"), col("t.score").as("cos"))
+  private def rankPairs(pairs: DataFrame, k: Int, scorer: VecScore = CosineScore,
+                        scoreCol: Option[String] = None): DataFrame = {
+    val sc = scoreCol.getOrElse(scorer.scoreCol)
+    topKPerQuery(pairs.filter(col(Q.id) =!= col(C.id))
+      .withColumn(sc, scorer.withNorms(col(Q.v), col(C.v), col(Q.n), col(C.n))), sc, k)
   }
-
 
   /** Top-k per query via the heap aggregate ([[graft.functions.TopKByScore]])
     * instead of a rank window — the shared tail of every ranking method
@@ -371,21 +376,18 @@ object Similarity {
     * path). The window formulation exchanges ALL scored candidates on
     * query_id and sorts each partition; the aggregate reduces every map
     * partition to ≤ k rows per query BEFORE the exchange and never sorts.
-    * Ordering contract is identical — (score desc, id asc), ids unique per
-    * query in every caller — so rows, ranks, and scores hash-match the
-    * window form bit for bit (pinned per method by the ann_* oracles).
-    * Precondition: scores are non-NaN (zero-norm vectors would yield NaN
-    * cosines, which the window's desc sort ranked FIRST while a heap
-    * comparison never admits) — no fixture or sane corpus carries
-    * zero-norm embeddings, and the oracle gate would catch a divergence.
+    * Ordering contract is identical — (score desc, id asc) under Spark's
+    * double ordering, so a NaN score (a zero-norm vector's cosine) ranks
+    * first as it does in a `DESC` sort, ids unique per query in every
+    * caller — so rows, ranks, and scores hash-match the window form bit
+    * for bit (pinned per method by the ann_* oracles).
     */
-  private def topKPerQuery(scored: DataFrame, scoreCol: String,
-                           idCol: String, k: Int): DataFrame = {
+  private def topKPerQuery(scored: DataFrame, scoreCol: String, k: Int): DataFrame = {
     import graft.functions.GraftFunctions.graft_topk
-    scored.groupBy("query_id")
-      .agg(graft_topk(col(scoreCol), col(idCol), k).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__pos", "__t")))
-      .select(col("query_id"), col("__t.id").as("neighbor_id"),
+    scored.groupBy(Q.id)
+      .agg(graft_topk(col(scoreCol), col(C.id), k).as("__top"))
+      .select(col(Q.id), posexplode(col("__top")).as(Seq("__pos", "__t")))
+      .select(col(Q.id), col("__t.id").as(C.id),
         (col("__pos") + 1).cast("int").as("rank"),
         col("__t.score").as(scoreCol))
   }
@@ -492,22 +494,11 @@ object Similarity {
                   vecCol: String, k: Int, centroids: DataFrame,
                   scorer: VecScore = CosineScore): DataFrame = {
     val cents = centroids.select(col("cent_id"), col("cent_v"))
-    def assign(df: DataFrame, id: String, vec: String): DataFrame = {
-      val carried = df.columns.filterNot(_ == id).toSeq
-      val scored = df.crossJoin(broadcast(cents))
-        .withColumn("__cs", scorer(col(vec), col("cent_v")))
-      assignNearest(scored, id, carried)
-    }
-    val c = assign(side(candidates, idCol, vecCol, "neighbor_id", "cv", "cn"),
-      "neighbor_id", "cv")
-    val q = assign(side(queries, idCol, vecCol, "query_id", "qv", "qn"),
-      "query_id", "qv")
-    val sc = scorer.scoreCol
-    val scored = c.join(broadcast(q), Seq("cent_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn(sc,
-        scorer.withNorms(col("qv"), col("cv"), col("qn"), col("cn")))
-    topKPerQuery(scored, sc, "neighbor_id", k)
+    def assigned(df: DataFrame, r: Role): DataFrame =
+      assignNearest(side(df, idCol, vecCol, r).crossJoin(broadcast(cents))
+        .withColumn("__cs", scorer(col(r.v), col("cent_v"))), r.id, Seq(r.v, r.n))
+    rankPairs(assigned(candidates, C)
+      .join(broadcast(assigned(queries, Q)), Seq("cent_id")), k, scorer)
   }
 
   /** The composed scale path: LSH bucketing (on the float vectors) to cut
@@ -516,29 +507,16 @@ object Similarity {
     * would move bucket boundaries; quantizing bucketed candidates only
     * perturbs ranks within a bucket).
     *
-    * NOT prep-aware: computes its bucket inline and scores with integer
-    * norms, so a [[prepVectors]] [[SigCol]]/[[NormCol]] on the input is
-    * ignored (the float norm is the wrong denominator for int8 scoring
-    * anyway). Do not assume the shared-scan reuse the sigOf-routed
-    * methods (lshTopK / lshTopKMultiProbe / lshTopKBanded) get.
+    * The bucket goes through [[sigOf]], so a prepared [[SigCol]] is
+    * reused; a prepared [[NormCol]] is not, since scores use the integer
+    * norms of [[int8Side]].
     */
   def lshQuantizedTopK(queries: DataFrame, candidates: DataFrame,
                        idCol: String, vecCol: String, k: Int,
                        planes: Int, dims: Int): DataFrame = {
-    def prep(df: DataFrame, id: String, v: String, n: String) =
-      df.select(col(idCol).as(id),
-        lshBucket(col(vecCol), planes, dims).as("bucket"),
-        col(vecCol).as("__v"), vecMaxAbs(col(vecCol)).as("__mx"))
-        .select(col(id), col("bucket"),
-          quantizeInt8With(col("__v"), col("__mx")).as(v))
-        .withColumn(n, sqrt(intDot(col(v), col(v)).cast("double")))
-    val q = prep(queries, "query_id", "qv", "qn")
-    val c = prep(candidates, "neighbor_id", "cv", "cn")
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        round(intDot(col("qv"), col("cv")).cast("double") / (col("qn") * col("cn")), 6))
-    topKPerQuery(scored, "cos", "neighbor_id", k)
+    def bucketed(df: DataFrame, r: Role) =
+      int8Side(df, idCol, vecCol, r, sigOf(df, vecCol, planes, dims).as("bucket"))
+    rankPairs(bucketed(candidates, C).join(broadcast(bucketed(queries, Q)), Seq("bucket")), k)
   }
 
   /** Build a persisted IVF index: assign every candidate to its nearest
@@ -658,39 +636,26 @@ object Similarity {
     // meaningless recall curve — enforce like the probes do (no-op when
     // no scorer is recorded, e.g. mid-build before the sidecar lands)
     requireScorerMatches(spark, path, scorer)
-    val cents = centroids.select(col("cent_id"), col("cent_v"))
-    val nLists = cents.count().toInt // bounded: the quantizer size
-    val q = sampleQueries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    // each sample query's centroid preference order — same score
-    // rounding and (desc score, cent_id) tie-break as the probe's own
-    // assignment, so rank r here IS "the r-th list the probe would read"
-    val wq = Window.partitionBy("query_id").orderBy(desc("__cs"), col("cent_id"))
-    val qrank = q.crossJoin(broadcast(cents))
-      .withColumn("__cs", scorer(col("qv"), col("cent_v")))
-      .select(col("query_id"), col("cent_id"),
-        row_number().over(wq).as("lrank"))
+    val nLists = centroids.count().toInt // bounded: the quantizer size
+    val q = side(sampleQueries, idCol, vecCol, Q)
+    // each sample query's lists in the probe's own preference order, so
+    // rank r here IS "the r-th list the probe would read"
+    val qrank = listOrder(q, centroids, scorer).select(Q.id, "cent_id", "lrank")
     val indexed = spark.read.parquet(path)
-    // exact ground truth, inlined rather than bruteForceTopK: that
-    // operator's requireSmall guards its CANDIDATES (all-pairs hazard),
-    // but calibration is Q×N — linear in the corpus for a bounded sample
-    // — so the guard belongs on the broadcast query sample instead.
-    // Same rounding, self-filter, and (desc cos, neighbor_id) tie-break.
+    // exact ground truth through the shared ranking step rather than
+    // bruteForceTopK: that operator's requireSmall guards its CANDIDATES
+    // (all-pairs hazard), but calibration is Q×N — linear in the corpus
+    // for a bounded sample — so the guard belongs on the broadcast query
+    // sample instead.
     val nQ = q.count()
     require(nQ <= 10000L,
       s"calibration sample too large to broadcast: $nQ queries (cap " +
         "10000) — calibrate on a hash-sample of the intended query load")
-    val qn = q.withColumn("qn", norm(col("qv")))
-    val ct = indexed.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
-      norm(col("v")).as("cn"))
-    val wt = Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id"))
     // pinned: consumed twice (total + the rank join) — without the pin
     // the Q×N scoring pass would execute twice
-    val truth = ct.crossJoin(broadcast(qn))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        scorer.withNorms(col("qv"), col("cv"), col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(wt)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"))
+    val truth = rankPairs(side(indexed, "vec_id", "v", C).crossJoin(broadcast(q)),
+        k, scorer)
+      .select(Q.id, C.id)
       .localCheckpoint()
     val total = truth.count().toDouble
     // list rank of every true neighbor's home list → hit counts per rank
@@ -698,9 +663,8 @@ object Similarity {
     val hits =
       if (total == 0) Array.empty[org.apache.spark.sql.Row]
       else truth
-        .join(indexed.select(col("vec_id").as("neighbor_id"), col("cent_id")),
-          Seq("neighbor_id"))
-        .join(qrank, Seq("query_id", "cent_id"))
+        .join(indexed.select(col("vec_id").as(C.id), col("cent_id")), Seq(C.id))
+        .join(qrank, Seq(Q.id, "cent_id"))
         .groupBy("lrank").agg(count(lit(1)).as("n"))
         .orderBy("lrank").collect()
     CacheControl.release(truth)
@@ -952,9 +916,10 @@ object Similarity {
     * probed list ids (bounded driver-side metadata — at most one per
     * query, nothing data-sized), and read the index ONCE through a single
     * `cent_id IN (…)` partition-pruned scan; per-query top-k falls out of
-    * one window. Versus per-query [[probeIvfIndex]] calls this replaces Q
-    * scans + Q driver round-trips with one scan + one join — the second
-    * parallelism axis (across queries, not just across index rows).
+    * the shared heap tail. Versus per-query [[probeIvfIndex]] calls this
+    * replaces Q scans + Q driver round-trips with one scan + one join —
+    * the second parallelism axis (across queries, not just across index
+    * rows).
     */
   def probeIvfIndexBatch(spark: org.apache.spark.sql.SparkSession, path: String,
                          queries: DataFrame, idCol: String, vecCol: String,
@@ -963,17 +928,13 @@ object Similarity {
                          scorer: VecScore = CosineScore): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1: $nProbe")
     requireScorerMatches(spark, path, scorer)
-    val cents = broadcast(centroids.select(col("cent_id"), col("cent_v")))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val wAssign = Window.partitionBy("query_id").orderBy(desc("__cs"), col("cent_id"))
+    val q = side(queries, idCol, vecCol, Q)
     // nProbe > 1 is the IVF recall knob: probe each query's nProbe nearest
     // lists instead of one — candidates near a Voronoi boundary live in a
     // neighboring list, and k-NN recall rises with probed lists at a cost
     // of nProbe/nCentroids of the index per query batch.
-    val assigned = q.crossJoin(cents)
-      .withColumn("__cs", scorer(col("qv"), col("cent_v")))
-      .withColumn("__rn", row_number().over(wAssign)).filter(col("__rn") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cent_id"))
+    val assigned = listOrder(q, centroids, scorer)
+      .filter(col("lrank") <= nProbe).drop("lrank")
     // ≤ one row per (query, probe) — the distinct list set is bounded by
     // the CENTROID count regardless of batch size: always metadata.
     // HOW it reaches the scan is gated on its size: a literal In/InSet
@@ -987,13 +948,14 @@ object Similarity {
     // cent_id partition column (same rows and pruned-scan shape as the
     // literal branch, both spec-pinned).
     val listIds = assigned.select("cent_id").distinct().collect().map(_.get(0))
-    val index =
+    val lists =
       if (listIds.length <= ivfInPruneMaxLists)
         spark.read.parquet(path).filter(col("cent_id").isin(listIds: _*))
       else
         spark.read.parquet(path).join(
           broadcast(assigned.select("cent_id").distinct()),
           Seq("cent_id"), "left_semi")
+    val index = side(lists, "vec_id", "v", C, col("cent_id"))
     // `assigned` is CALLER-sized (query batch × nProbe, raw vectors
     // riding along): broadcasting it is the right plan for interactive
     // batches — every executor probes its pruned index partitions against
@@ -1016,11 +978,23 @@ object Similarity {
       if (probeBroadcastEligible(bounded * nProbe, maxBroadcastRows))
         index.join(broadcast(assigned), Seq("cent_id"))
       else index.join(assigned, Seq("cent_id"))
-    val sc = scorer.scoreCol
-    val scored = joined
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn(sc, scorer(col("qv"), col("v")))
-    topKPerQuery(scored, sc, "vec_id", k)
+    rankPairs(joined, k, scorer)
+  }
+
+  /** Every query's lists in probe preference order: `q`'s columns plus
+    * (cent_id, lrank), lrank 1 being the nearest centroid under `scorer`
+    * (ties → lower cent_id). [[probeIvfIndexBatch]] reads the lists with
+    * lrank ≤ nProbe, and [[calibrateNProbe]] counts each true neighbor at
+    * the lrank of its home list, so a calibrated width is exactly the
+    * probe's.
+    */
+  private def listOrder(q: DataFrame, centroids: DataFrame,
+                        scorer: VecScore): DataFrame = {
+    val w = Window.partitionBy(Q.id).orderBy(desc("__cs"), col("cent_id"))
+    q.crossJoin(broadcast(centroids.select(col("cent_id"), col("cent_v"))))
+      .withColumn("__cs", scorer(col(Q.v), col("cent_v")))
+      .withColumn("lrank", row_number().over(w))
+      .drop("cent_v", "__cs")
   }
 
   /** [[probeIvfIndexBatch]]'s literal-In pruning cap: probed-list sets
@@ -1055,38 +1029,31 @@ object Similarity {
     * missed — more planes per band = fewer random candidates, more
     * bands = higher recall).
     *
-    * NOT prep-aware: computes its `planes`-bit signature and norms
-    * inline. A [[prepVectors]] [[SigCol]] on `df` is ignored — this is a
-    * single-input pair enumeration, not one of the multi-method top-k
-    * consumers the shared prep scan exists for. Callers wanting one
-    * signature pass across detector families should use the sigOf-routed
-    * top-k methods.
+    * Signatures and norms go through the same helpers as the top-k
+    * methods, so a [[prepVectors]]-prepared `df` reuses its [[SigCol]]
+    * and [[NormCol]].
     */
   def lshNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                       threshold: Double, planes: Int, nBands: Int,
                       dims: Int): DataFrame = {
-    require(planes % nBands == 0, "planes must divide into equal bands")
-    val w = planes / nBands
-    val vecs = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-      norm(col(vecCol)).as("n"))
-    val sigs = df.select(col(idCol).as("id"),
-      lshBucket(col(vecCol), planes, dims).as("sig"))
-    val bandCols = (0 until nBands).map { b =>
-      struct(lit(b).as("band"), substring(col("sig"), b * w + 1, w).as("bh"))
-    }
-    val bands = sigs.select(col("id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
+    val bands = bandRows(df, idCol, vecCol, "id", planes, nBands, dims)
     val cands = bands.select(col("band"), col("bh"), col("id").as("id1"))
       .join(bands.select(col("band"), col("bh"), col("id").as("id2")), Seq("band", "bh"))
       .filter(col("id1") < col("id2"))
       .select("id1", "id2").distinct()
-    cands
-      .join(vecs.select(col("id").as("id1"), col("v").as("v1"), col("n").as("n1")), Seq("id1"))
-      .join(vecs.select(col("id").as("id2"), col("v").as("v2"), col("n").as("n2")), Seq("id2"))
-      .withColumn("cos", round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 6))
-      .filter(col("cos") >= threshold)
+    cosinePairsAbove(cands.join(side(df, idCol, vecCol, Pair1), Seq("id1"))
+      .join(side(df, idCol, vecCol, Pair2), Seq("id2")), threshold)
       .select("id1", "id2", "cos")
   }
+
+  /** The near-dup verification step: exact cosine of each (id1, id2)
+    * pair from the [[Pair1]]/[[Pair2]] side columns, kept when at least
+    * `threshold`.
+    */
+  private def cosinePairsAbove(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs.withColumn("cos",
+        CosineScore.withNorms(col(Pair1.v), col(Pair2.v), col(Pair1.n), col(Pair2.n)))
+      .filter(col("cos") >= threshold)
 
   /** Symmetric per-vector int8 quantization: q_i = floor(x_i/maxAbs·127
     * + 0.5) ∈ [-127, 127]. A float32 corpus shrinks 4× (the difference
@@ -1151,20 +1118,9 @@ object Similarity {
     * ranking.
     */
   def quantizedTopK(queries: DataFrame, candidates: DataFrame,
-                    idCol: String, vecCol: String, k: Int): DataFrame = {
-    def prep(df: DataFrame, id: String, v: String, n: String) =
-      df.select(col(idCol).as(id),
-        col(vecCol).as("__v"), vecMaxAbs(col(vecCol)).as("__mx"))
-        .select(col(id), quantizeInt8With(col("__v"), col("__mx")).as(v))
-        .withColumn(n, sqrt(intDot(col(v), col(v)).cast("double")))
-    val q = prep(queries, "query_id", "qv", "qn")
-    val c = prep(candidates, "neighbor_id", "cv", "cn")
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        round(intDot(col("qv"), col("cv")).cast("double") / (col("qn") * col("cn")), 6))
-    topKPerQuery(scored, "cos", "neighbor_id", k)
-  }
+                    idCol: String, vecCol: String, k: Int): DataFrame =
+    rankPairs(int8Side(candidates, idCol, vecCol, C)
+      .crossJoin(broadcast(int8Side(queries, idCol, vecCol, Q))), k)
 
   /** Embedding-cosine near-duplicate pairs (id1 < id2, cosine ≥ threshold).
     * Exact and quadratic — the small-N verifier; [[lshNearDupPairs]] is
@@ -1175,11 +1131,9 @@ object Similarity {
                          maxRows: Long = DefaultQuadraticMaxRows): DataFrame = {
     requireSmall(df, maxRows, "cosineNearDupPairs",
       "lshNearDupPairs (banded hyperplane LSH)")
-    val a = df.select(col(idCol).as("id1"), col(vecCol).as("v1"), norm(col(vecCol)).as("n1"))
-    val b = df.select(col(idCol).as("id2"), col(vecCol).as("v2"), norm(col(vecCol)).as("n2"))
-    a.crossJoin(b).filter(col("id1") < col("id2"))
-      .withColumn("cos", round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 6))
-      .filter(col("cos") >= threshold)
+    cosinePairsAbove(side(df, idCol, vecCol, Pair1)
+        .crossJoin(side(df, idCol, vecCol, Pair2)).filter(col("id1") < col("id2")),
+      threshold)
       .select("id1", "id2", "cos")
   }
 
@@ -1202,24 +1156,20 @@ object Similarity {
                     centroids: DataFrame, threshold: Double): DataFrame = {
     val cents = centroids.select(col("cent_id"), col("cent_v"),
       norm(col("cent_v")).as("cent_n"))
-    val scored = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-        norm(col(vecCol)).as("n"))
+    val scored = side(df, idCol, vecCol, Role("id", "v", "n"))
       .crossJoin(broadcast(cents))
-      .withColumn("__cs", round(dot(col("v"), col("cent_v")) /
-        (col("n") * col("cent_n")), 6))
+      .withColumn("__cs",
+        CosineScore.withNorms(col("v"), col("cent_v"), col("n"), col("cent_n")))
     // cached: both sides of the within-cluster pair join read the
     // assignment, and the broadcast-score + argmax behind it is the
     // corpus-wide pass
     val assigned = assignNearest(scored, "id", Seq("v", "n"))
       .select(col("cent_id"), col("id"), col("v"), col("n"))
       .cache()
-    val a = assigned.select(col("cent_id"), col("id").as("id1"),
-      col("v").as("v1"), col("n").as("n1"))
-    val b = assigned.select(col("cent_id"), col("id").as("id2"),
-      col("v").as("v2"), col("n").as("n2"))
-    val pairs = a.join(b, Seq("cent_id")).filter(col("id1") < col("id2"))
-      .withColumn("cos", round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), 6))
-      .filter(col("cos") >= threshold)
+    def half(r: Role) = assigned.select(col("cent_id"), col("id").as(r.id),
+      col("v").as(r.v), col("n").as(r.n))
+    val pairs = cosinePairsAbove(half(Pair1).join(half(Pair2), Seq("cent_id"))
+        .filter(col("id1") < col("id2")), threshold)
       .select("id1", "id2")
     // clusterAssign materializes eagerly (cache policy), so the
     // assignment cache is dead once it returns
@@ -1290,19 +1240,11 @@ object Similarity {
              vecCol: String, k: Int, m: Int,
              codebook: Seq[(Int, Int, Seq[Double])],
              cosineScore: Boolean = false): DataFrame = {
-    val c0 = pqReconFrame(candidates, idCol, vecCol, m, codebook)
-    // norms projected once per SIDE before the join (the bruteForceTopK
-    // pattern), not per pair
-    val c = if (cosineScore) c0.withColumn("cn", norm(col("rv"))) else c0
-    val q0 = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val q = if (cosineScore) q0.withColumn("qn", norm(col("qv"))) else q0
-    val scoreExpr =
-      if (cosineScore) dot(col("qv"), col("rv")) / (col("qn") * col("cn"))
-      else dot(col("qv"), col("rv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(scoreExpr, 6))
-    topKPerQuery(scored, "score", "neighbor_id", k)
+    // the inner-product score never reads the side norms, so the
+    // optimizer prunes them
+    rankPairs(pqSide(candidates, idCol, vecCol, m, codebook)
+        .crossJoin(broadcast(side(queries, idCol, vecCol, Q))),
+      k, if (cosineScore) CosineScore else DotScore, Some("score"))
   }
 
   /** The PQ encode → reconstruct projection as its own frame:
@@ -1393,20 +1335,11 @@ object Similarity {
                    codebook: Seq[(Int, Int, Seq[Double])],
                    rerank: Int): DataFrame = {
     require(rerank >= k, s"rerank window $rerank must be >= k ($k)")
-    val recon = pqReconFrame(candidates, idCol, vecCol, m, codebook)
-      .withColumn("rn", norm(col("rv")))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("qn", norm(col("qv")))
-    val pqScored = recon.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("pq_score",
-        round(dot(col("qv"), col("rv")) / (col("qn") * col("rn")), 6))
-    val shortlist = topKPerQuery(pqScored, "pq_score", "neighbor_id", rerank)
-      .select("query_id", "neighbor_id")
-    val cRaw = side(candidates, idCol, vecCol, "neighbor_id", "cv", "cn")
-    val scored = shortlist.join(cRaw, Seq("neighbor_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("cos", round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-    topKPerQuery(scored, "cos", "neighbor_id", k)
+    val q = side(queries, idCol, vecCol, Q)
+    val shortlist = rankPairs(pqSide(candidates, idCol, vecCol, m, codebook)
+        .crossJoin(broadcast(q)), rerank, scoreCol = Some("pq_score"))
+      .select(Q.id, C.id)
+    rankPairs(shortlist.join(side(candidates, idCol, vecCol, C), Seq(C.id))
+      .join(broadcast(q), Seq(Q.id)), k)
   }
 }

@@ -212,7 +212,8 @@ object MetadataOnlyCount extends Rule[LogicalPlan] {
   }
 }
 
-/** `spark.sql.extensions` entry point:
+/** graft's one `spark.sql.extensions` entry point: the metadata-only
+  * optimizer rule and the `graft_dot` SQL function.
   * {{{
   *   SparkSession.builder()
   *     .config("spark.sql.extensions", "graft.plans.GraftSparkExtensions")
@@ -221,9 +222,6 @@ object MetadataOnlyCount extends Rule[LogicalPlan] {
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => MetadataOnlyCount)
-    // one extensions entry registers the whole library surface: the
-    // native SQL functions too, so a user setting only this class gets
-    // graft_dot alongside the metadata-only rules
-    new graft.functions.GraftExtensions().apply(ext)
+    ext.injectFunction(graft.functions.GraftFunctions.dotFunction)
   }
 }

@@ -1023,14 +1023,14 @@ object ExtendedQueries {
               |ORDER BY query_id, rank""".stripMargin)
     ),
 
-    // Same result as ann_cosine_topk through the heap-aggregate path
-    // (TypedImperativeAggregate) instead of the rank window — the SAME
-    // DuckDB oracle must hash-match both implementations.
+    // ann_cosine_topk's plan against the rank-window oracle again: the
+    // heap aggregate (TypedImperativeAggregate) that every ranking method
+    // ends in must reproduce row_number() over (cos DESC, neighbor_id).
     QueryDef(
       "ann_topk_agg",
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
-        Similarity.bruteForceTopKAgg(
+        Similarity.bruteForceTopK(
           e.filter(col("vec_id") < 8), e, "vec_id", "embedding", k = 5)
           .orderBy("query_id", "rank")
       },
@@ -4031,8 +4031,7 @@ object ExtendedQueries {
 
     // The native codegen'd graft_dot expression through the PURE SQL
     // surface: GraftFunctions.register puts it on the live session (the
-    // same builder GraftExtensions/GraftSparkExtensions inject at session
-    // build), and the SQL text hash-matches DuckDB's list-fold oracle —
+    // same builder GraftSparkExtensions injects at session build), and the SQL text hash-matches DuckDB's list-fold oracle —
     // pinning that SQL users get the identical bit-exact fold the Column
     // API gets.
     QueryDef(

@@ -21,4 +21,11 @@ object GraftShim {
       : Seq[org.apache.spark.sql.catalyst.rules.Rule[
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
     ext.buildOptimizerRules(s)
+
+  /** The names of the SQL functions a [[SparkSessionExtensions]]
+    * instance would register (`registerFunctions` is `private[sql]`).
+    */
+  def injectedFunctionNames(ext: SparkSessionExtensions): Seq[String] =
+    ext.registerFunctions(new catalyst.analysis.SimpleFunctionRegistry)
+      .listFunction().map(_.funcName)
 }

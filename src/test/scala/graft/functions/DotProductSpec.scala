@@ -37,16 +37,28 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("graft_topk aggregate equals the window formulation on real data") {
+    // bruteForceTopK (the shared heap tail) against row_number() over the
+    // same scored pairs, built here from the built-in window
+    import org.apache.spark.sql.expressions.Window
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val viaWindow = Similarity.bruteForceTopK(
-      e.filter(col("vec_id") < 4), e, "vec_id", "embedding", k = 7)
+    val q = e.filter(col("vec_id") < 4)
+    def norm(v: String) = sqrt(GraftFunctions.graft_dot(col(v), col(v)))
+    val scored = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
+      .crossJoin(q.select(col("vec_id").as("query_id"), col("embedding").as("qv")))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos",
+        round(GraftFunctions.graft_dot(col("qv"), col("cv")) / (norm("qv") * norm("cv")), 6))
+    val w = Window.partitionBy("query_id").orderBy(desc("cos"), col("neighbor_id"))
+    val viaWindow = scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= 7)
+      .select("query_id", "neighbor_id", "rank", "cos")
       .orderBy("query_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-    val viaAgg = Similarity.bruteForceTopKAgg(
-      e.filter(col("vec_id") < 4), e, "vec_id", "embedding", k = 7)
+    val viaHeap = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", k = 7)
       .orderBy("query_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-    assert(viaAgg.toSeq == viaWindow.toSeq)
+    assert(viaHeap.length == 4 * 7)
+    assert(viaHeap.toSeq == viaWindow.toSeq)
   }
 
   test("graft_topk: tie-break by smaller id, k larger than group") {

@@ -630,6 +630,26 @@ class SimilaritySpec extends SparkSpec {
     check((q, c) => Similarity.ivfTopK(q, c, "vec_id", "embedding", 4,
       nCentroids = 4))
     check((q, c) => Similarity.quantizedTopK(q, c, "vec_id", "embedding", 4))
+    check((q, c) => Similarity.lshQuantizedTopK(q, c, "vec_id", "embedding", 4,
+      planes = 4, dims = 3))
+    val book = Similarity.pqCodebookHashOrdered(many, "vec_id", "embedding",
+      m = 3, nCodes = 4)
+    for (cosineScore <- Seq(false, true))
+      check((q, c) => Similarity.pqTopK(q, c, "vec_id", "embedding", 4, m = 3,
+        codebook = book, cosineScore = cosineScore))
+    check((q, c) => Similarity.pqTopKRerank(q, c, "vec_id", "embedding", 4, m = 3,
+      codebook = book, rerank = 8))
+    val cents = many.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("cent_id"), col("embedding").as("cent_v"))
+    for (scorer <- Seq(Similarity.DotScore, Similarity.L2Score))
+      check((q, c) => Similarity.ivfTopKWith(q, c, "vec_id", "embedding", 4,
+        cents, scorer))
+    // the near-dup pair finders share the sides and the band helper
+    assert(rows(Similarity.lshNearDupPairs(prepped, "vec_id", "embedding", 0.9,
+      planes = 8, nBands = 4, dims = 3)) == rows(Similarity.lshNearDupPairs(many,
+      "vec_id", "embedding", 0.9, planes = 8, nBands = 4, dims = 3)))
+    assert(rows(Similarity.cosineNearDupPairs(prepped, "vec_id", "embedding", 0.9))
+      == rows(Similarity.cosineNearDupPairs(many, "vec_id", "embedding", 0.9)))
     // asking for MORE planes than were prepared fails loudly (metadata
     // guard) instead of silently slicing a too-short prefix
     val narrow = Similarity.prepVectors(many, "embedding",

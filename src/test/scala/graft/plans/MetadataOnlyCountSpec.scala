@@ -140,10 +140,14 @@ class MetadataOnlyCountSpec extends SparkSpec {
     // first session creation in a JVM, so an end-to-end check would need
     // a fresh SparkContext. Verify the injection itself via the
     // same-package shim instead; rule behavior is covered above through
-    // the install() path (the identical Rule object).
+    // the install() path (the identical Rule object). The class checked
+    // is the one the cluster preset names, and it must carry graft_dot too.
+    val cls = graft.SparkConfigs.clusterConf()("spark.sql.extensions")
     val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftSparkExtensions().apply(ext)
+    Class.forName(cls).getDeclaredConstructor().newInstance()
+      .asInstanceOf[org.apache.spark.sql.SparkSessionExtensions => Unit](ext)
     val rules = org.apache.spark.sql.GraftShim.injectedOptimizerRules(ext, spark)
     assert(rules.exists(_ eq MetadataOnlyCount))
+    assert(org.apache.spark.sql.GraftShim.injectedFunctionNames(ext) == Seq("graft_dot"))
   }
 }
