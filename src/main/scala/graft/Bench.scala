@@ -1,5 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{GraftShim, SparkSession}
+import BenchCore.{Counters, jsonSafe, sec}
 
 object Bench {
   /** Streaming queries pay a fixed micro-batch startup cost (readStream →
@@ -9,8 +12,48 @@ object Bench {
     */
   private def isStreaming(name: String): Boolean = name.contains("stream")
 
-  private def jsonSafe(s: String): String =
-    s.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
+  /** Spark local property that names the query whose jobs
+    * [[QueryCounters]] charges.
+    */
+  private val QueryKey = "graft.bench.query"
+
+  /** Charges every job, stage and task to the query named by [[QueryKey]]
+    * on the thread that started the job (threads a query starts inherit
+    * it); jobs started outside a named query are not counted. Events
+    * arrive on the listener bus asynchronously: read [[of]] only
+    * after the bus has drained.
+    */
+  private final class QueryCounters extends SparkListener {
+    private val stageQuery = mutable.HashMap.empty[Int, String]
+    private val counts = mutable.HashMap.empty[String, Counters]
+
+    private def charge(q: String)(f: Counters => Counters): Unit =
+      counts(q) = f(counts.getOrElse(q, Counters()))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      Option(e.properties).flatMap(p => Option(p.getProperty(QueryKey))).foreach { q =>
+        e.stageIds.foreach(stageQuery(_) = q)
+        charge(q)(c => c.copy(jobs = c.jobs + 1))
+      }
+    }
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+      stageQuery.get(e.stageInfo.stageId).foreach(charge(_)(c => c.copy(stages = c.stages + 1)))
+    }
+
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      for (q <- stageQuery.get(e.stageId); m <- Option(e.taskMetrics)) charge(q)(c => c.copy(
+        tasks = c.tasks + 1,
+        cpuNs = c.cpuNs + m.executorCpuTime,
+        shuffleReadBytes = c.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
+        shuffleWriteBytes = c.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+        spillBytes = c.spillBytes + m.diskBytesSpilled,
+        inputBytes = c.inputBytes + m.inputMetrics.bytesRead))
+    }
+
+    def of(queries: Seq[String]): Seq[(String, Counters)] =
+      synchronized(queries.map(q => q -> counts.getOrElse(q, Counters())))
+  }
 
   def main(args: Array[String]): Unit = {
     val rc = run(k => sys.env.get(k))
@@ -29,15 +72,10 @@ object Bench {
   def run(envGet: String => Option[String]): Int = {
     def env(k: String, d: String) = envGet(k).getOrElse(d)
     val sfDir = env("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = env("SPARK_GRAFT_CPUS", "4")
     val borrowed = SparkSession.getDefaultSession.filter(
       s => !s.sparkContext.isStopped)
     val spark = borrowed.getOrElse(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate())
+      SparkConfigs.local(env("SPARK_GRAFT_CPUS", "4").toInt))
     // owned sessions only: a borrowed (test-JVM) session keeps whatever
     // log level its suite chose — mutating it here silently overrode
     // BenchSelftestSpec's ERROR setting (self-review catch)
@@ -88,7 +126,26 @@ object Bench {
     // query's two samples, so a window has to span the whole run to
     // poison both — the exact lesson ScaleBench's 12-interleaved-sweep
     // protocol already encodes (NOTES.md).
-    val passA = ordered.map { case (n, fn) => n -> timed(fn, sfDir, selftestMs) }
+    // The first sweep also records each query's Spark counters: the
+    // query's name rides on a local property set and cleared outside
+    // `timed`'s window, and the bus is drained once after the sweep. The
+    // listener is removed before anything else runs, so a borrowed
+    // session keeps none.
+    val sc = spark.sparkContext
+    val listener = new QueryCounters
+    sc.addSparkListener(listener)
+    val passA = try ordered.map { case (n, fn) =>
+      sc.setLocalProperty(QueryKey, n)
+      val t = timed(fn, sfDir, selftestMs)
+      sc.setLocalProperty(QueryKey, null)
+      n -> t
+    } finally {
+      try GraftShim.drainListenerBus(sc)
+      catch { case _: java.util.concurrent.TimeoutException =>
+        System.err.println("[bench] listener bus did not drain: counters may be short") }
+      sc.removeSparkListener(listener)
+    }
+    val counters = listener.of(ordered.map(_._1))
     val failedA = passA.collect { case (n, Left(_)) => n }.toSet
     val live = ordered.filterNot(kv => failedA(kv._1))
     val passB = live.map { case (n, fn) => n -> timed(fn, sfDir, selftestMs) }
@@ -202,11 +259,7 @@ object Bench {
         val sf1Cpus = env("SPARK_GRAFT_SF1_CPUS", "32")
         val sf1Dir = env("SPARK_GRAFT_SF1_DIR", "/tmp/graft_sf1")
         spark.stop()
-        val s1 = SparkSession.builder()
-          .master(s"local[$sf1Cpus]")
-          .config("spark.sql.shuffle.partitions", sf1Cpus)
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
+        val s1 = SparkConfigs.local(sf1Cpus.toInt)
         s1.sparkContext.setLogLevel("WARN")
         try {
           Sf1Corpus.ensure(s1, sfDir, sf1Dir)
@@ -280,7 +333,6 @@ object Bench {
     // per-query JSON to a file in the repo for the judge, and make the
     // LAST printed line a compact JSON (totals + slowest queries, capped
     // to a 1800-char budget) that survives the clip and parses.
-    def sec(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = ok.map { case (k, v) => "\"" + k + "\":" + sec(v) }.mkString("{", ",", "}")
     val es = errs.map { case (k, e) => "\"" + k + "\":\"" + e + "\"" }.mkString("{", ",", "}")
     val cc = sentinelChecks.map { case (n, rec, re, ratio) =>
@@ -368,7 +420,7 @@ object Bench {
         "],\"spread\":" + sec(BenchCore.stableSpread(ts)) + "}"
     }.mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","batch_total":${sec(batchTotal)},"streaming_total":${sec(streamingTotal)},"n_queries":${ok.size},"n_err":${errs.size},$ccFields,$sf1Fields"sf":"$sfDir","runs_top20":$runs2,"errors":$es,"queries":$qs}"""
+      s"""{"metric":"total","value":${sec(total)},"unit":"sec","batch_total":${sec(batchTotal)},"streaming_total":${sec(streamingTotal)},"n_queries":${ok.size},"n_err":${errs.size},$ccFields,$sf1Fields"sf":"$sfDir","runs_top20":$runs2,"errors":$es,"counters":${BenchCore.countersJson(counters)},"queries":$qs}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath), (full + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }

@@ -16,6 +16,33 @@ package graft
   */
 object BenchCore {
 
+  /** Seconds as the artifact prints them: three decimals, `.` separator
+    * whatever the JVM's default locale.
+    */
+  def sec(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  /** A free string made safe to sit inside a JSON string literal. */
+  def jsonSafe(s: String): String =
+    s.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
+
+  /** What one query cost Spark, summed over the tasks of the jobs it
+    * started: the layer-by-layer counters beside its seconds.
+    */
+  final case class Counters(jobs: Long = 0, stages: Long = 0, tasks: Long = 0,
+                            cpuNs: Long = 0, shuffleReadBytes: Long = 0,
+                            shuffleWriteBytes: Long = 0, spillBytes: Long = 0,
+                            inputBytes: Long = 0)
+
+  /** The artifact's `counters` object: one entry per query, by name. */
+  def countersJson(byQuery: Seq[(String, Counters)]): String =
+    byQuery.map { case (n, c) =>
+      "\"" + jsonSafe(n) + "\":{\"jobs\":" + c.jobs + ",\"stages\":" + c.stages +
+        ",\"tasks\":" + c.tasks + ",\"cpu_s\":" + sec(c.cpuNs / 1e9) +
+        ",\"shuffle_read_bytes\":" + c.shuffleReadBytes +
+        ",\"shuffle_write_bytes\":" + c.shuffleWriteBytes +
+        ",\"spill_bytes\":" + c.spillBytes + ",\"input_bytes\":" + c.inputBytes + "}"
+    }.mkString("{", ",", "}")
+
   /** How far apart two timings of the same plan are, direction-blind:
     * `max(recheck/recorded, recorded/recheck)`. 1.0 = identical.
     */

@@ -1,7 +1,6 @@
 package graft
 
 import java.time.LocalDate
-import org.apache.spark.sql.SparkSession
 import graft.io.{Config, Connections}
 import graft.jobs._
 import graft.meta.{DefaultsStore, StatusTracker}
@@ -62,13 +61,9 @@ object Cli {
       if (scheds.nonEmpty) CliEnv.schedules = scheds
     }
 
-    lazy val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    lazy val spark = SparkConfigs.session(
+      sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     lazy val runner    = new JobRunner(spark, CliEnv.defaults, CliEnv.tracker)
     lazy val scheduler = new Scheduler(CliEnv.registry, runner)
 

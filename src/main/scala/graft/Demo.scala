@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.io.Connections
 import graft.jobs._
@@ -15,12 +14,7 @@ import graft.ops.ValueSpec._
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkConfigs.local(4)
     spark.sparkContext.setLogLevel("WARN")
 
     val warehouse = java.nio.file.Files.createTempDirectory("graft_demo").toString

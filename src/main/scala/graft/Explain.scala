@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection harness: prints the formatted physical plan per query
   * and flags scale smells — missing filter pushdown, full-column scans,
@@ -10,12 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val only  = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkConfigs.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     // Queries whose BroadcastNestedLoopJoin is the DESIGNED shape, not a
     // defect: brute-force ANN baselines broadcast the (tiny) query side —

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Debug runner: execute ONE named SparkEntry query against an sf dir and
   * show its head — `runMain graft.RunOne <sfdir> <query> [n]`. Lets a
@@ -11,13 +10,7 @@ object RunOne {
     val sfDir = args(0)
     val name  = args(1)
     val n     = if (args.length > 2) args(2).toInt else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkConfigs.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.show(n, truncate = false)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops._
 
@@ -66,11 +66,7 @@ object ScaleBench {
       .split(",").map(_.trim.toInt).toSeq
     val outJson = if (args.length > 2) args(2) else "/tmp/scale_curves.json"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkConfigs.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     val work = "/tmp/scalebench"
     val workFs = new org.apache.hadoop.fs.Path(work)

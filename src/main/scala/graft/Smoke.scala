@@ -1,17 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Local replica of the driver's t1 smoke: SparkEntry.entry must return >0
   * rows on sf0.001. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkConfigs.local(4)
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     df.show(20, truncate = false)

@@ -7,13 +7,18 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkConfigs {
 
-  /** Local harness session (tests, Verify, Bench): cores-matched shuffle
-    * partitions, UTC, AQE on (default in Spark 4).
+  /** Local harness session (tests, the mains, the benchmarks):
+    * cores-matched shuffle partitions, UTC, AQE on (default in Spark 4).
     */
-  def local(cores: Int = 32): SparkSession =
+  def local(cores: Int = 32): SparkSession = session(s"local[$cores]", cores)
+
+  /** The one session builder: the [[local]] settings on any `master`
+    * (a deployment's `SPARK_MASTER` through [[graft.Cli]]).
+    */
+  def session(master: String, shufflePartitions: Int): SparkSession =
     SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .master(master)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

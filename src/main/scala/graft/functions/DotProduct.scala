@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
   *
   * Length mismatch takes the common prefix; null elements are treated as
   * 0 (the embedding corpus has none — documented divergence from the HOF
-  * null-propagation).
+  * null-propagation). As in the HOF, a NaN element makes the result NaN
+  * and empty input gives 0.0; a null array gives null.
   */
 case class DotProduct(left: Expression, right: Expression) extends BinaryExpression {
 

@@ -393,7 +393,8 @@ object StreamOps {
     * (`graft.stream.scratch` system property, or the
     * `SPARK_GRAFT_STREAM_SCRATCH` env var). The bench lane points it at
     * tmpfs (`/dev/shm`) so the ~0.4 s/micro-batch WAL-fsync+addBatch
-    * floor ([[StreamProfile]]'s decomposition) stops being disk-fsync
+    * floor (NOTES.md, round 13 running log, "Streaming fixed-overhead
+    * profile") stops being disk-fsync
     * bound and the lane isolates QUERY cost — a measurement-honesty
     * knob, not a deployment setting (a real deployment wants its
     * checkpoint durable). Default: unset, plain `java.io.tmpdir`

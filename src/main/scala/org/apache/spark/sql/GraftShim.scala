@@ -28,4 +28,11 @@ object GraftShim {
   def injectedFunctionNames(ext: SparkSessionExtensions): Seq[String] =
     ext.registerFunctions(new catalyst.analysis.SimpleFunctionRegistry)
       .listFunction().map(_.funcName)
+
+  /** Block until the listener bus has delivered every event posted so
+    * far (`listenerBus` is `private[spark]`); throws
+    * `java.util.concurrent.TimeoutException` after Spark's default wait.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -143,4 +143,14 @@ class BenchCoreSpec extends AnyFunSuite {
       Map("q" -> Seq(2.0, 2.1)), { _ => idle += 1; Some(1.0) })
     assert(!c4 && idle == 0)
   }
+
+  test("countersJson: one object per query, JSON-safe names, locale-independent seconds") {
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY) // "," decimal separator
+    try assert(BenchCore.countersJson(Seq(
+        "q\"1\n" -> BenchCore.Counters(11, 15, 38, 1234567890L, 10, 20, 0, 4096))) ==
+      """{"q 1 ":{"jobs":11,"stages":15,"tasks":38,"cpu_s":1.235,"shuffle_read_bytes":10,""" +
+      """"shuffle_write_bytes":20,"spill_bytes":0,"input_bytes":4096}}""")
+    finally java.util.Locale.setDefault(prev)
+  }
 }

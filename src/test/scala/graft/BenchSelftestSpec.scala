@@ -14,39 +14,38 @@ package graft
   */
 class BenchSelftestSpec extends SparkSpec {
 
-  test("injected sweep delay trips the sentinel: contended=true artifact, exit intent 3") {
+  /** Runs the bench in-process on the suite's session; (exit intent, artifact). */
+  private def bench(env: (String, String)*): (Int, String) = {
     val out = java.nio.file.Files.createTempFile("graft_selftest_bench", ".json")
-    val env = Map(
+    // respected: Bench.run only sets WARN on sessions it OWNS
+    spark.sparkContext.setLogLevel("ERROR")
+    val rc = Bench.run((env.toMap + ("SPARK_GRAFT_BENCH_OUT" -> out.toString)).get)
+    assert(!spark.sparkContext.isStopped, "Bench.run must not stop a borrowed session")
+    (rc, new String(java.nio.file.Files.readAllBytes(out), "UTF-8"))
+  }
+
+  test("injected sweep delay trips the sentinel: contended=true artifact, exit intent 3") {
+    val (rc, art) = bench(
       "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.001",
       // three cheap queries keep the spec ~20 s; the injected 2 s delay
       // dominates each sweep sample so recorded/recheck ratio > 3
       "SPARK_GRAFT_BENCH_ONLY" -> "q1_pricing_summary,q3_topk_revenue,f1_filter",
       "SPARK_GRAFT_BENCH_SELFTEST_SWEEP_DELAY_MS" -> "2000",
-      "SPARK_GRAFT_BENCH_STRICT" -> "1",
-      "SPARK_GRAFT_BENCH_OUT" -> out.toString)
-    // respected: Bench.run only sets WARN on sessions it OWNS
-    spark.sparkContext.setLogLevel("ERROR")
-    val rc = Bench.run(env.get)
+      "SPARK_GRAFT_BENCH_STRICT" -> "1")
     assert(rc == 3, s"strict mode must return exit intent 3 on a contended run, got $rc")
-    assert(!spark.sparkContext.isStopped,
-      "Bench.run must not stop a borrowed session")
-    val art = new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
     assert(art.contains("\"contended\":true"),
       s"artifact must self-label contended=true: $art")
     assert(art.contains("\"timing\":\"interleaved_sweeps_min\""))
   }
 
   test("clean run returns 0 and leaves the borrowed session alive") {
-    val out = java.nio.file.Files.createTempFile("graft_selftest_clean", ".json")
-    val env = Map(
+    val queries = Seq("q1_pricing_summary", "q3_topk_revenue", "f1_filter")
+    val (rc, art) = bench(
       "SPARK_GRAFT_SF_DIR" -> "/root/testdata/sf0.001",
-      "SPARK_GRAFT_BENCH_ONLY" -> "q1_pricing_summary",
-      "SPARK_GRAFT_BENCH_OUT" -> out.toString)
-    spark.sparkContext.setLogLevel("ERROR")
-    val rc = Bench.run(env.get)
-    assert(rc == 0)
-    assert(!spark.sparkContext.isStopped)
-    val art = new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
-    assert(art.contains("\"n_err\":0"))
+      "SPARK_GRAFT_BENCH_ONLY" -> queries.mkString(","))
+    assert(rc == 0 && art.contains("\"n_err\":0"))
+    queries.foreach(q => assert(("\"counters\":\\{.*\"" + q +
+      "\":\\{\"jobs\":[1-9]\\d*,\"stages\":\\d+,\"tasks\":[1-9]").r.findFirstIn(art).isDefined,
+      s"counters with jobs >= 1 and tasks >= 1 for $q: $art"))
   }
 }

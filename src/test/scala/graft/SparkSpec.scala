@@ -7,12 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * reference used one in-memory SQLite per test file; SURVEY.md §5).
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkConfigs.local(4)
 
   def sqlTs(s: String): java.sql.Timestamp = java.sql.Timestamp.valueOf(s)
 }

@@ -22,8 +22,25 @@ class DotProductSpec extends SparkSpec {
   }
 
   test("known values, double arrays, null elements as zero") {
-    val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0))).toDF("a", "b")
-    assert(df.select(GraftFunctions.graft_dot(col("a"), col("b"))).head().getDouble(0) == 32.0)
+    import org.apache.spark.sql.catalyst.expressions.{Literal, codegen}
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    def arr(xs: Any*) = Literal.create(xs, ArrayType(DoubleType))
+    // scaladoc edge cases on eval and on codegen; None = SQL null, text compare: NaN = NaN
+    Seq((arr(1.0, 2.0, 3.0), arr(4.0, 5.0, 6.0), Some(32.0)),
+      (arr(1.0, null, 3.0), arr(4.0, 5.0, null), Some(4.0)),   // null element = 0
+      (arr(1.0, Double.NaN), arr(1.0, 2.0), Some(Double.NaN)), // NaN propagates
+      (arr(), arr(), Some(0.0)),                               // empty
+      (arr(1.0, 2.0, 3.0), arr(4.0, 5.0), Some(14.0)),         // common prefix
+      (Literal.create(null, ArrayType(DoubleType)), arr(1.0), None)).foreach { case (a, b, want) =>
+      val e = DotProduct(a, b)
+      val row = codegen.GenerateUnsafeProjection.generate(Seq(e)).apply(null)
+      val paths = Seq(Option(e.eval()), if (row.isNullAt(0)) None else Some(row.getDouble(0)))
+      assert(paths.forall(_.map(_.toString) == want.map(_.toString)), s"$a . $b: $paths")
+    }
+    // the HOF formulation agrees where it is defined on an edge: NaN, empty
+    val hof = spark.range(1).select(Similarity.dotHof(typedLit(Seq(1.0, Double.NaN)),
+      typedLit(Seq(1.0, 2.0))), Similarity.dotHof(typedLit(Seq.empty[Double]), typedLit(Seq.empty[Double])))
+    assert(hof.head().getDouble(0).isNaN && hof.head().getDouble(1) == 0.0)
   }
 
   test("SQL registration via functionRegistry and via extensions builder") {

@@ -1,18 +1,13 @@
 package graft.ops
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.apache.spark.sql.SparkSession
 
 /** AsOf.asofJoin vs a naive per-row reference computation over random
   * timelines (including exact-tie timestamps).
   */
 object AsOfProperties extends Properties("AsOf") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.SparkConfigs.local(4)
 
   private val rowGen = for {
     user <- Gen.choose(1L, 3L)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.apache.spark.sql.SparkSession
 
 /** Law for the distributed connected-components loop: on arbitrary pair
   * graphs it must return exactly the components a sequential union-find
@@ -10,11 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object DedupGraphProperties extends Properties("ConnectedComponents") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.SparkConfigs.local(4)
 
   private val pairsGen: Gen[List[(Long, Long)]] = for {
     n     <- Gen.choose(1, 14)            // node universe 0..n

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Laws of the prefix-filtered exact-Jaccard join: the PPJoin prefix
@@ -12,11 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object DedupProperties extends Properties("Dedup") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.SparkConfigs.local(4)
 
   private val vocab = Vector("the", "quick", "brown", "fox", "jumps",
     "over", "lazy", "dog", "alpha", "beta", "gamma", "delta")

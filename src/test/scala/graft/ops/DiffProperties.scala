@@ -1,18 +1,14 @@
 package graft.ops
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Algebraic laws of the CDC diff + dedup ops (SURVEY.md §5: property tests
   * where semantics are algebraic).
   */
 object DiffProperties extends Properties("Diff") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.SparkConfigs.local(4)
 
   private val rowGen = for {
     k  <- Gen.choose(0L, 30L)

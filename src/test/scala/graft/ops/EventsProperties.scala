@@ -1,17 +1,12 @@
 package graft.ops
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Events.sessionize vs a naive per-user fold over random timelines. */
 object EventsProperties extends Properties("Events") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.SparkConfigs.local(4)
 
   private val GapMin = 30
 

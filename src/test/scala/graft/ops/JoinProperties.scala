@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Algebraic laws of the scale-path join rewrites: each must return
@@ -10,11 +10,7 @@ import org.apache.spark.sql.functions._
   */
 object JoinProperties extends Properties("JoinRewrites") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.SparkConfigs.local(4)
 
   // ── RangeJoin.intervalJoin ≡ naive range predicate join ────────────────
 

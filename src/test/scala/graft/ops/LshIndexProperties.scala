@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Law for the persisted LSH band index: probing an index built from a
@@ -17,11 +16,7 @@ object LshIndexProperties extends Properties("LshIndex") {
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
     p.withMinSuccessfulTests(40)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.SparkConfigs.local(4)
 
   private val word: Gen[String] = Gen.oneOf(
     "alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")

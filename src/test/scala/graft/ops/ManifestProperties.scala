@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.apache.spark.sql.SparkSession
 
 /** Model-based law for the transactional manifest layer: an ARBITRARY
   * sequence of append / overwrite / upsert / compact operations must read
@@ -17,11 +16,7 @@ object ManifestProperties extends Properties("Manifest") {
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
     p.withMinSuccessfulTests(25)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.SparkConfigs.local(4)
 
   sealed trait Op
   final case class Append(rows: List[(Long, String)]) extends Op

@@ -35,7 +35,6 @@ object RebalanceProperties extends Properties("RebalanceRates") {
 }
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.apache.spark.sql.SparkSession
 
 /** Laws for the corpus-prep building blocks: on arbitrary small corpora
   * the distributed ops must return exactly what naive Scala set/sequence
@@ -44,11 +43,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PrepProperties extends Properties("CorpusPrep") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = graft.SparkConfigs.local(4)
 
   private val word: Gen[String] = Gen.oneOf(
     "alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
