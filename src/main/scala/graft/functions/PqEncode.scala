@@ -36,7 +36,8 @@ import org.apache.spark.sql.types._
   * must fail loudly, never reconstruct from garbage); extra trailing
   * dimensions are ignored (slice semantics). Null elements read as 0
   * ([[DotProduct]]'s documented divergence from the HOF's
-  * null-propagation; the embedding corpus has none).
+  * null-propagation; the embedding corpus has none); a null vector
+  * yields null.
   */
 case class PqEncode(child: Expression, book: Seq[Double],
                     m: Int, nCodes: Int, subDim: Int)

@@ -885,41 +885,36 @@ object Similarity {
       .write.mode(mode).partitionBy("cent_id").parquet(path)
   }
 
-  /** Probe a persisted IVF index for one query vector's top-k: assign the
-    * query to its list, then scan ONLY that list's partition (the cent_id
-    * filter prunes at the directory level — assert `PartitionFilters` in
-    * the plan, no full-index scan).
+  /** Probe a persisted IVF index for one query vector's top-k: the
+    * one-row case of [[probeIvfIndexBatch]] at `nProbe = 1`, so the scan
+    * reads only the query's nearest list (a `cent_id` partition filter in
+    * the plan). Output: (query_id, neighbor_id, score column) in rank
+    * order.
     */
   def probeIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                     queryId: Long, queryVec: Seq[Float],
                     centroids: DataFrame, k: Int,
                     scorer: VecScore = CosineScore): DataFrame = {
-    requireScorerMatches(spark, path, scorer)
-    val qv = typedLit(queryVec)
-    val qCent = centroids
-      .withColumn("__cs", scorer(qv, col("cent_v")))
-      .orderBy(desc("__cs"), col("cent_id"))
-      .select("cent_id").limit(1)
-      .head().getInt(0)
-    val sc = scorer.scoreCol
-    spark.read.parquet(path)
-      .filter(col("cent_id") === qCent && col("vec_id") =!= queryId)
-      .withColumn(sc, scorer(qv, col("v")))
-      .withColumn("query_id", lit(queryId))
-      .orderBy(desc(sc), col("vec_id"))
-      .limit(k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col(sc))
+    import spark.implicits._
+    probeIvfIndexBatch(spark, path, Seq((queryId, queryVec)).toDF(Q.id, Q.v),
+        Q.id, Q.v, centroids, k, scorer = scorer)
+      .orderBy("rank").select(Q.id, C.id, scorer.scoreCol)
   }
 
   /** Probe a persisted IVF index for a whole BATCH of query vectors in one
-    * pass: assign every query to its nearest list, collect the distinct
-    * probed list ids (bounded driver-side metadata — at most one per
-    * query, nothing data-sized), and read the index ONCE through a single
-    * `cent_id IN (…)` partition-pruned scan; per-query top-k falls out of
-    * the shared heap tail. Versus per-query [[probeIvfIndex]] calls this
-    * replaces Q scans + Q driver round-trips with one scan + one join —
-    * the second parallelism axis (across queries, not just across index
-    * rows).
+    * pass: assign every query to its `nProbe` nearest lists, read those
+    * lists through one `cent_id IN (…)` partition-pruned scan, and rank
+    * each query's candidates on the shared heap tail — one scan + one join
+    * instead of Q per-query scans and driver round-trips.
+    *
+    * A call's fixed cost follows the lists it probes, not the index:
+    *  - one bounded collect of the assignment decides the broadcast gate,
+    *    gives the probed list ids and becomes the broadcast side (a local
+    *    relation), so the caller's query plan executes once per call;
+    *  - the scan lists only the probed lists' `cent_id=` directories, read
+    *    under `basePath` so `cent_id` stays a partition column. A probed
+    *    list with no directory holds no vectors and is skipped. Listing is
+    *    per call, so appends are visible to the next probe.
     */
   def probeIvfIndexBatch(spark: org.apache.spark.sql.SparkSession, path: String,
                          queries: DataFrame, idCol: String, vecCol: String,
@@ -928,55 +923,56 @@ object Similarity {
                          scorer: VecScore = CosineScore): DataFrame = {
     require(nProbe >= 1, s"nProbe must be >= 1: $nProbe")
     requireScorerMatches(spark, path, scorer)
-    val q = side(queries, idCol, vecCol, Q)
-    // nProbe > 1 is the IVF recall knob: probe each query's nProbe nearest
-    // lists instead of one — candidates near a Voronoi boundary live in a
-    // neighboring list, and k-NN recall rises with probed lists at a cost
-    // of nProbe/nCentroids of the index per query batch.
-    val assigned = listOrder(q, centroids, scorer)
+    // nProbe > 1 is the IVF recall knob: candidates near a Voronoi
+    // boundary live in a neighboring list, so recall rises with probed
+    // lists at a cost of nProbe/nCentroids of the index per batch.
+    val assigned = listOrder(side(queries, idCol, vecCol, Q), centroids, scorer)
       .filter(col("lrank") <= nProbe).drop("lrank")
-    // ≤ one row per (query, probe) — the distinct list set is bounded by
-    // the CENTROID count regardless of batch size: always metadata.
-    // HOW it reaches the scan is gated on its size: a literal In/InSet
-    // prunes the cent_id directories at plan time and is free for
-    // interactive probes, but at 100 TB operating points (≥1e5-list
-    // indexes probed by wide batches × nProbe) a thousands-literal set
-    // bloats every serialized plan copy and stops being a cheap plan
-    // constant — above the gate the distinct probed lists reach the scan
-    // as a broadcast LEFT SEMI join instead, and directory pruning
-    // happens through Spark's dynamic-partition-pruning subquery on the
-    // cent_id partition column (same rows and pruned-scan shape as the
-    // literal branch, both spec-pinned).
-    val listIds = assigned.select("cent_id").distinct().collect().map(_.get(0))
+    // `assigned` is CALLER-sized (batch × nProbe, raw vectors riding
+    // along), and an UNGUARDED broadcast of caller data is the classic
+    // 100 TB OOM (VERDICT r11 #3): the gate admits maxBroadcastRows/nProbe
+    // query rows. A query has at most nProbe rows, so a collect capped at
+    // (that cap + 1) · nProbe rows either is complete and counts the
+    // batch, or proves it above the gate: never a silent truncation.
+    val rowCap = math.max(1L, maxBroadcastRows / nProbe)
+    val limit = math.min((rowCap + 1) * nProbe, Int.MaxValue.toLong).toInt
+    val rows = assigned.limit(limit).collect()
+    val queryRows =
+      if (rows.length < limit) rows.map(_.getAs[Any](Q.id)).distinct.length.toLong
+      else rowCap + 1
+    val small = probeBroadcastEligible(queryRows * nProbe, maxBroadcastRows)
+    // Above the gate: a plain equi-join on cent_id, same rows (spec-
+    // pinned), and the assignment runs twice (list ids + join) — at that
+    // batch size the pruned index scan dominates either way.
+    val listIds =
+      if (small) rows.map(_.getAs[Any]("cent_id")).distinct
+      else assigned.select("cent_id").distinct().collect().map(_.get(0))
+    // The list set is bounded by the CENTROID count. A literal In prunes
+    // directories at plan time, but a thousands-literal set (≥1e5-list
+    // indexes × wide batches) bloats every serialized plan copy: above
+    // ivfInPruneMaxLists the lists reach the scan as a broadcast LEFT SEMI
+    // join over the planned assignment, pruned by Spark's dynamic-
+    // partition-pruning subquery on cent_id (same rows, spec-pinned).
     val lists =
-      if (listIds.length <= ivfInPruneMaxLists)
-        spark.read.parquet(path).filter(col("cent_id").isin(listIds: _*))
-      else
-        spark.read.parquet(path).join(
-          broadcast(assigned.select("cent_id").distinct()),
+      if (listIds.length <= ivfInPruneMaxLists) {
+        // Spark lists every directory it reads (as a job above 32), so
+        // read only the probed lists'; with none present, the root read
+        // keeps the schema and the IN filter yields no rows
+        val root = new org.apache.hadoop.fs.Path(path)
+        val present = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(root).map(_.getPath.getName).toSet
+        val dirs = listIds.map(id => s"cent_id=$id").filter(present)
+          .map(d => new org.apache.hadoop.fs.Path(root, d).toString)
+        (if (dirs.isEmpty) spark.read.parquet(path)
+         else spark.read.option("basePath", path).parquet(dirs.toIndexedSeq: _*))
+          .filter(col("cent_id").isin(listIds.toIndexedSeq: _*))
+      } else
+        spark.read.parquet(path).join(broadcast(assigned.select("cent_id").distinct()),
           Seq("cent_id"), "left_semi")
     val index = side(lists, "vec_id", "v", C, col("cent_id"))
-    // `assigned` is CALLER-sized (query batch × nProbe, raw vectors
-    // riding along): broadcasting it is the right plan for interactive
-    // batches — every executor probes its pruned index partitions against
-    // an in-memory map — but an UNGUARDED broadcast of caller data is the
-    // classic 100 TB OOM (VERDICT r11 #3). Above `maxBroadcastRows`
-    // (default 100k rows ≈ tens of MB at typical dims) the probe falls
-    // back to a plain equi-join on cent_id: same rows (spec-pinned), the
-    // shuffle replaces the driver round-trip, and the assignment plan
-    // executes twice (list-id collect + join) — at that batch size the
-    // pruned index scan dominates either way.
-    // BOUNDED eligibility scan (ADVICE r12): the gate only needs to know
-    // whether the batch exceeds maxBroadcastRows/nProbe rows, so scan at
-    // most one row past that cap instead of fully executing the caller's
-    // query-source plan — a tiny interactive batch (the common case, and
-    // the one that always broadcasts) pays a few-row scan, not a count
-    // of everything behind it.
-    val rowCap = math.max(1L, maxBroadcastRows / nProbe)
-    val bounded = q.limit(math.min(rowCap + 1, Int.MaxValue.toLong).toInt).count()
     val joined =
-      if (probeBroadcastEligible(bounded * nProbe, maxBroadcastRows))
-        index.join(broadcast(assigned), Seq("cent_id"))
+      if (small) index.join(broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), assigned.schema)), Seq("cent_id"))
       else index.join(assigned, Seq("cent_id"))
     rankPairs(joined, k, scorer)
   }
@@ -1271,7 +1267,7 @@ object Similarity {
 
   /** The built-ins-only HOF formulation of [[pqReconFrame]], kept as
     * the reference semantics [[graft.functions.PqEncode]] must match
-    * bit-for-bit (PqEncodeSpec) — the same dotHof/[[dot]] pairing. At
+    * bit-for-bit (PqEncodeEquivalenceSpec) — the same dotHof/[[dot]] pairing. At
     * the production setting (m=32, 64 codes) the interpreted
     * per-element lambdas + a 64-struct `array_sort` per subspace made
     * THIS the whole `ann_recall` row's cost (~84 s of the 85.7 s

@@ -1058,6 +1058,72 @@ class SimilaritySpec extends SparkSpec {
     assert(inPlan.contains("PartitionFilters") && inPlan.contains("cent_id"))
   }
 
+  /** 40 vectors along a 3-D curve: an auto-sized index over them has six lists. */
+  private lazy val curve = spark.range(0, 40).select(col("id").as("vec_id"),
+    array(cos(col("id") * 0.37).cast("float"),
+      sin(col("id") * 0.37).cast("float"),
+      cos(col("id") * 0.11).cast("float")).as("embedding"))
+
+  test("IVF probe lists only the probed lists' directories") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfdirs").toString + "/idx"
+    val cents = Similarity.buildIvfIndexAuto(curve, "vec_id", "embedding", dir)
+    val query = curve.filter(col("vec_id") === 7L)
+    // the query's two nearest lists, scored here on the driver
+    val qv = query.head().getAs[scala.collection.Seq[Float]]("embedding").map(_.toDouble)
+    def cosine(a: collection.Seq[Double], b: collection.Seq[Double]) =
+      a.zip(b).map { case (x, y) => x * y }.sum /
+        math.sqrt(a.map(x => x * x).sum * b.map(x => x * x).sum)
+    val probed = cents.collect()
+      .map(r => (r.getInt(0), cosine(qv, r.getSeq[Double](1))))
+      .sortBy { case (id, c) => (-BigDecimal(c).setScale(6, BigDecimal.RoundingMode.HALF_UP), id) }
+      .take(2).map(_._1).toSet
+    val probe = Similarity.probeIvfIndexBatch(spark, dir, query,
+      "vec_id", "embedding", cents, k = 3, nProbe = 2)
+    val lists = probe.inputFiles.map(f => "cent_id=(-?\\d+)".r.findFirstMatchIn(f)
+      .map(_.group(1).toInt).getOrElse(fail(s"$f is not a list file"))).toSet
+    assert(lists == probed, s"scan covers lists $lists, probed $probed of 6")
+    assert(probe.count() == 3)
+    CacheControl.release(cents)
+  }
+
+  test("IVF batch probe evaluates the query frame once per call") {
+    val dir = java.nio.file.Files.createTempDirectory("ivfonce").toString + "/idx"
+    val cents = Similarity.buildIvfIndexAuto(curve, "vec_id", "embedding", dir)
+    val evals = spark.sparkContext.longAccumulator("query vector evaluations")
+    val tap = udf { (v: Seq[Float]) => evals.add(1); v }
+    val queries = curve.filter(col("vec_id") < 5)
+      .withColumn("embedding", tap(col("embedding")))
+    val rows = Similarity.probeIvfIndexBatch(spark, dir, queries,
+      "vec_id", "embedding", cents, k = 3, nProbe = 2).collect()
+    assert(rows.length == 15)
+    assert(evals.value == 5, s"5 query rows evaluated ${evals.value} times")
+    CacheControl.release(cents)
+  }
+
+  test("IVF probe skips a list no vector was assigned to") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("ivfempty").toString + "/idx"
+    // no vector in `vecs` has a z component, so list 2 stays empty
+    val cents = Seq((0, Seq(1.0, 0.0, 0.0)), (1, Seq(0.0, 1.0, 0.0)),
+      (2, Seq(0.0, 0.0, 1.0))).toDF("cent_id", "cent_v")
+    Similarity.buildIvfIndex(vecs, "vec_id", "embedding", cents, dir)
+    assert(!new java.io.File(dir, "cent_id=2").exists())
+    // nearest list 2 (cos 0.8), then list 1 (cos 0.6)
+    val query = Seq((100L, Array(0.0f, 0.6f, 0.8f))).toDF("vec_id", "embedding")
+    def rows(cs: org.apache.spark.sql.DataFrame, nProbe: Int) =
+      Similarity.probeIvfIndexBatch(spark, dir, query, "vec_id", "embedding",
+          cs, k = 2, nProbe = nProbe).collect()
+        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"),
+          r.getAs[Int]("rank"), r.getAs[Double]("cos"))).toSet
+    val alone = rows(cents.filter(col("cent_id") === 1), 1)
+    assert(alone.nonEmpty)
+    assert(rows(cents, 2) == alone)
+    val onlyEmpty = Similarity.probeIvfIndexBatch(spark, dir, query,
+      "vec_id", "embedding", cents, k = 2)
+    assert(onlyEmpty.collect().isEmpty)
+    assert(onlyEmpty.columns.toSeq == Seq("query_id", "neighbor_id", "rank", "cos"))
+  }
+
   test("batch IVF probe with nProbe = nCentroids recovers exact brute-force top-k") {
     val dir = java.nio.file.Files.createTempDirectory("ivfnp").toString + "/idx"
     val cents = Similarity.kmeansCentroids(vecs, "vec_id", "embedding", k = 2, iters = 2)

@@ -93,6 +93,43 @@ class PqEncodeEquivalenceSpec extends SparkSpec {
       causes(e).exists(c => Option(c.getMessage).exists(_.contains("codebook needs 4"))))
   }
 
+  test("edge values on eval and codegen: null element 0, null vector null, short throws, NaN as the HOF") {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, codegen}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    import graft.functions.PqEncode
+    // one subspace of two dims, codes (0, 0) and (1, 1)
+    val codebook = Seq((0, 0, Seq(0.0, 0.0)), (0, 1, Seq(1.0, 1.0)))
+    def arr(xs: Any*) = Literal.create(xs, ArrayType(FloatType))
+    def expr(v: Literal) = PqEncode(v, Seq(0.0, 0.0, 1.0, 1.0), m = 1, nCodes = 2, subDim = 2)
+    // the interpreted and the generated result; None = SQL null
+    def paths(v: Literal): Seq[Option[Seq[Double]]] = {
+      val e = expr(v)
+      val row = codegen.GenerateUnsafeProjection.generate(Seq(e)).apply(null)
+      Seq(Option(e.eval()).map(_.asInstanceOf[ArrayData].toDoubleArray().toSeq),
+        if (row.isNullAt(0)) None else Some(row.getArray(0).toDoubleArray().toSeq))
+    }
+    // a null element reads as 0: (null, 0.9) encodes as (0, 0.9), code 0,
+    // where (1, 0.9) would pick code 1
+    assert(paths(arr(null, 0.9f)) == Seq.fill(2)(Some(Seq(0.0, 0.0))))
+    assert(paths(arr(1.0f, 0.9f)) == Seq.fill(2)(Some(Seq(1.0, 1.0))))
+    assert(paths(Literal.create(null, ArrayType(FloatType))) == Seq(None, None))
+    Seq(arr(0.5f), arr()).foreach { v =>
+      intercept[IllegalArgumentException](expr(v).eval())
+      intercept[IllegalArgumentException](
+        codegen.GenerateUnsafeProjection.generate(Seq(expr(v))).apply(null))
+    }
+    // NaN: both paths reconstruct what the HOF does
+    val nan = Seq(Array(Float.NaN, 0.5f), Array(0.9f, Float.NaN))
+    val hof = Similarity.pqReconFrameHof(
+        nan.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding"),
+        "vec_id", "embedding", 1, codebook)
+      .orderBy("neighbor_id").collect().map(r => Some(r.getSeq[Double](1)))
+    nan.zip(hof).foreach { case (v, want) =>
+      assert(paths(arr(v.toSeq: _*)) == Seq(want, want), s"${v.toSeq}")
+    }
+  }
+
   test("codegen path actually evaluates (no fallback): plan contains the expression") {
     val m = 1; val codebook = Seq((0, 0, Seq(0.0, 0.0)), (0, 1, Seq(1.0, 1.0)))
     // repartition keeps the projection out of ConvertToLocalRelation's
